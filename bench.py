@@ -178,10 +178,11 @@ def main() -> None:
     # STDOUT ORDER (round-10 verdict item 1): the driver parses the LAST
     # line of a bounded stdout tail. Printing the compact no-queries summary
     # last — the round-10 layout — meant PERF_r10.per_query parsed empty in
-    # both rounds. So: summary FIRST (a totals-only fallback if the tail is
-    # so short it cuts the full line entirely), then the full result with
-    # the per-query map as the FINAL line (~7 KB at 3 sig figs; the driver's
-    # tail demonstrably captured the map region in round 10).
+    # both rounds. So the full result with the per-query map is the FINAL
+    # line (~7 KB at 3 sig figs; the driver's tail demonstrably captured the
+    # map region in round 10). The summary printed before it is for a human
+    # reading the console: a tail too short for the final line has already
+    # dropped the summary too, so it is no fallback.
     print(json.dumps(summary, separators=(",", ":")))
     print(line)
     if self_name is not None:

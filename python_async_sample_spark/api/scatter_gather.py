@@ -20,6 +20,13 @@ Spark collapses the whole machinery into declarative joins:
   shuffle from stats, so both reference modes compile to one physical
   strategy chosen by the optimizer, not by the caller.
 
+A ``left_semi`` join has set semantics on its right side, so neither the
+keys nor the links are de-duplicated first: a ``distinct`` would cost a
+shuffle stage each and change no row. On inputs small enough to broadcast,
+a ``glass_raw_data`` request therefore runs four Spark jobs: the keys
+broadcast, the summary broadcast, the links broadcast (history semi-joined
+with the keys) and the result scan.
+
 Parallelism is partition-level and automatic; per-task failure isolation
 replaces the reference's per-future exception swallowing (:66-68).
 """
@@ -55,9 +62,7 @@ class KeyedQuery:
         instead of len(keys) point queries on a thread pool. Arguments are
         runtime-validated like the reference's ``@checktypes`` entry points
         (``eda_query.py:163-165``)."""
-        return self.history.join(
-            F.broadcast(keys.select(self.key_col).distinct()), self.key_col, "left_semi"
-        )
+        return self.history.join(F.broadcast(keys.select(self.key_col)), self.key_col, "left_semi")
 
     @checked
     def glass_raw_data(
@@ -71,7 +76,7 @@ class KeyedQuery:
         for signature parity with the reference — both modes were different
         physical strategies for the same semantics, a choice Catalyst now
         makes; the returned plan is identical."""
-        links = self.glass_history(keys).select(*self.link_cols).distinct()
+        links = self.glass_history(keys).select(*self.link_cols)
         out = self.result.join(links, self.link_cols, "left_semi")
         if summary is not None:
             out = out.join(summary, self.link_cols, "left_semi")

@@ -10,10 +10,11 @@ SQL strings to get the same effect.
 from __future__ import annotations
 
 import os
-from functools import lru_cache
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # The driver-provided star schema (TESTDATA.md).
 TABLES = (
@@ -47,39 +48,120 @@ def pin_reader_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
-@lru_cache(maxsize=None)
-def _nanos_timestamp_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark cannot read those
-    natively; they are read as long and converted (footer-only probe)."""
+# Session confs that change the schema Spark infers from a parquet footer.
+# Their values are part of every cache key below, so flipping one between
+# two reads never serves the schema the other value inferred.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+)
+
+# path -> (key, schema, nanos columns). One entry per path, replaced when the
+# key moves, so rewrites do not grow it. dict get/set are atomic and every
+# stored entry is correct for its own key, so concurrent callers need no
+# lock: threads that miss at once each infer, and the last store wins.
+_FOOTER_CACHE: dict[str, tuple[tuple, StructType, tuple[str, ...]]] = {}
+
+
+def _listing(path: str) -> tuple | None:
+    """``(relative path, size, mtime_ns)`` of a local file (relative path
+    ``""``) or of every file under a local dataset directory. ``None`` when
+    the OS cannot see the path (a URI, a missing path, a concurrent
+    delete): such a path is never cached."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                out.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+        return tuple(out)
+    except OSError:
+        return None
+
+
+def _is_data_file(rel: str) -> bool:
+    """Spark's file index skips names starting with ``_`` or ``.``
+    (``_SUCCESS``, ``.crc``), except ``key=value`` partition directories."""
+    return not any(
+        part.startswith(("_", ".")) and "=" not in part for part in rel.split(os.sep)
+    )
+
+
+def _nanos_timestamp_columns(path: str, listing: tuple | None) -> tuple[str, ...]:
+    """Columns stored as parquet TIMESTAMP(NANOS) in any data file — Spark
+    cannot read those natively; they are read as long and converted
+    (footer-only probe)."""
     import pyarrow.parquet as pq
 
-    schema = pq.read_schema(path)
-    return tuple(
-        name
-        for name, typ in zip(schema.names, schema.types)
-        if str(typ) == "timestamp[ns]"
-    )
+    if listing is None:
+        files = [path]
+    else:
+        rels = [rel for rel, _, _ in listing if _is_data_file(rel)]
+        files = [os.path.join(path, rel) if rel else path for rel in rels]
+    cols: dict[str, None] = {}  # first-seen order, no repeats
+    for f in files:
+        schema = pq.read_schema(f)
+        for name, typ in zip(schema.names, schema.types):
+            if str(typ) == "timestamp[ns]":
+                cols[name] = None
+    return tuple(cols)
+
+
+def parquet_footer(spark: SparkSession, path: str) -> tuple[StructType, tuple[str, ...]]:
+    """The schema Spark infers for a parquet file or dataset directory, and
+    its TIMESTAMP(NANOS) columns, from one process-wide cache.
+
+    Spark's own inference runs a job per read; a cache hit costs a ``stat``
+    per file and no job. The key is the file listing (path, size and
+    mtime_ns of every file) plus the values of ``_SCHEMA_CONFS``, so a
+    rewrite or a conf flip re-infers. When the path has nanosecond columns,
+    ``nanosAsLong`` is set on the session, and the returned schema reads
+    them as long nanos (see :func:`micros_from_nanos`).
+    """
+    listing = _listing(path)
+    key = (listing, tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    cached = _FOOTER_CACHE.get(path)
+    hit = cached is not None and cached[0] == key  # stored keys never hold a None listing
+    ns_cols = cached[2] if hit else _nanos_timestamp_columns(path, listing)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if hit:
+        return cached[1], ns_cols
+    schema = spark.read.parquet(path).schema
+    if listing is not None:
+        _FOOTER_CACHE[path] = (key, schema, ns_cols)
+    return schema, ns_cols
+
+
+def micros_from_nanos(df: DataFrame, ns_cols: tuple[str, ...]) -> DataFrame:
+    """Truncate long-nanos columns to microsecond timestamps with integer
+    arithmetic (a double division would lose precision above 2^53 ns)."""
+    for c in ns_cols:
+        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one parquet table. Filters/column pruning push down.
 
-    Nanosecond-timestamp columns (unsupported by Spark's parquet reader) are
-    read as long nanos via ``spark.sql.legacy.parquet.nanosAsLong`` and
-    truncated to microsecond timestamps with integer arithmetic (a double
-    division would lose precision above 2^53 ns).
+    The schema comes from :func:`parquet_footer`, so a repeated load of an
+    unchanged file plans without a Spark job. Nanosecond-timestamp columns
+    (unsupported by Spark's parquet reader) are read as long nanos and
+    truncated to microsecond timestamps.
     """
     # The driver owns the session; pin the reader confs at call time.
     pin_reader_conf(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    ns_cols = _nanos_timestamp_columns(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return df
+    schema, ns_cols = parquet_footer(spark, path)
+    return micros_from_nanos(spark.read.schema(schema).parquet(path), ns_cols)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

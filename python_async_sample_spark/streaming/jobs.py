@@ -26,7 +26,11 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_async_sample_spark.sources.readers import _nanos_timestamp_columns, pin_reader_conf
+from python_async_sample_spark.sources.readers import (
+    micros_from_nanos,
+    parquet_footer,
+    pin_reader_conf,
+)
 
 # State-store partitions for a bounded drain. A streaming query's state is
 # partitioned by spark.sql.shuffle.partitions *at first checkpoint*, and
@@ -62,18 +66,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema, ns_cols = parquet_footer(spark, path)
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir.rstrip("/"))
     )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return stream
+    return micros_from_nanos(stream, ns_cols)
 
 
 def windowed_event_counts(stream: DataFrame, window: str = "1 day") -> DataFrame:
@@ -259,6 +258,17 @@ def _stage_source_with_sentinels(sf_dir: str, src_dir: str, copies: int = 1) -> 
         pq.write_table(sentinel, f"{src_dir}/9{i}_sentinel.parquet")
 
 
+def read_staged_events(spark: SparkSession, sf_dir: str, src_dir: str) -> DataFrame:
+    """One file per trigger over a staging dir built by
+    :func:`_stage_source_with_sentinels`. Its files share the events file's
+    footer (byte copies, and sentinels written with its arrow schema), so
+    the schema is the events file's cached one."""
+    pin_reader_conf(spark)
+    schema, ns_cols = parquet_footer(spark, f"{sf_dir.rstrip('/')}/events.parquet")
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src_dir)
+    return micros_from_nanos(stream, ns_cols)
+
+
 def stream_dedup_counts_to_parquet(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
@@ -281,13 +291,9 @@ def stream_dedup_counts_to_parquet(
     shutil.copy(events_path, f"{src_dir}/01_events_redelivered.parquet")
 
     pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(events_path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    # src_dir holds byte copies of events_path, so its footer is the schema
+    schema, ns_cols = parquet_footer(spark, events_path)
+    stream = micros_from_nanos(spark.readStream.schema(schema).parquet(src_dir), ns_cols)
 
     counts = (
         stream.dropDuplicates(["event_id"])
@@ -326,18 +332,7 @@ def stream_bounded_dedup_counts_to_parquet(
     src_dir = f"{work_dir}/src"
     _stage_source_with_sentinels(sf_dir, src_dir, copies=2)
 
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    stream = read_staged_events(spark, sf_dir, src_dir)
 
     counts = (
         stream.withWatermark("ts", redelivery_horizon)
@@ -388,18 +383,7 @@ def stream_session_stats_to_parquet(
     src_dir = f"{work_dir}/src"
     _stage_source_with_sentinels(sf_dir, src_dir)
 
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    stream = read_staged_events(spark, sf_dir, src_dir)
 
     sessions = (
         stream.withWatermark("ts", delay)
@@ -483,10 +467,8 @@ def stream_incremental_mv_to_parquet(
 
     pin_reader_conf(spark)
     events_path = f"{sf_dir.rstrip('/')}/events.parquet"
-    ns_cols = _nanos_timestamp_columns(events_path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(events_path)
+    schema, _ = parquet_footer(spark, events_path)
+    ev = spark.read.schema(schema).parquet(events_path)
     # deterministic hash split (not repartition round-robin) so each staged
     # file's membership is stable across runs
     ev.withColumn("__f", F.pmod(F.xxhash64("event_id"), F.lit(n_source_files))).repartition(

@@ -37,10 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from python_async_sample_spark.sources.readers import _nanos_timestamp_columns, pin_reader_conf
+from python_async_sample_spark.sources.readers import parquet_footer, pin_reader_conf
 from python_async_sample_spark.streaming.jobs import (
     _stage_source_with_sentinels,
     bounded_drain_conf,
+    read_staged_events,
 )
 
 _OUT_SCHEMA = (
@@ -123,18 +124,7 @@ def stream_user_profiles_to_parquet(
     src_dir = f"{work_dir}/src"
     _stage_source_with_sentinels(sf_dir, src_dir)
 
-    pin_reader_conf(spark)
-    ns_cols = _nanos_timestamp_columns(f"{src_dir}/00_events.parquet")
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    stream = read_staged_events(spark, sf_dir, src_dir)
 
     gap_us = gap_minutes * 60 * 1_000_000
     profiles = (
@@ -294,10 +284,8 @@ def stream_profiles_tws_to_parquet(
     _os.makedirs(src, exist_ok=True)
     pin_reader_conf(spark)
     events_path = f"{sf_dir.rstrip('/')}/events.parquet"
-    ns_cols = _nanos_timestamp_columns(events_path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    full = spark.read.parquet(events_path)
+    schema, ns_cols = parquet_footer(spark, events_path)
+    full = spark.read.schema(schema).parquet(events_path)
     ts_us = (
         F.expr("`ts` div 1000") if ns_cols else F.unix_micros("ts")
     )

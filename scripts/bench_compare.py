@@ -8,11 +8,10 @@ filters sub-second jitter and first-call codegen).
 
 Usage:
     python bench.py && cp BENCH_SELF.run.json /tmp/bench.json
-    # (bench.py prints the full per-query line FIRST and a compact
-    #  totals-only summary line LAST — round 8, so the driver's bounded
-    #  tail capture always retains something parseable; the file-mode
-    #  input here must be the full line, i.e. BENCH_SELF(.run).json —
-    #  feeding the summary line is rejected with a pointed error)
+    # (bench.py prints a compact totals-only summary line FIRST and the
+    #  full per-query line LAST; the file-mode input here must be the full
+    #  line — `bench.py | tail -1` or BENCH_SELF(.run).json — feeding the
+    #  summary line is rejected with a pointed error)
     python scripts/bench_compare.py /tmp/bench.json
     python scripts/bench_compare.py --run        # runs bench.py itself
     python scripts/bench_compare.py /tmp/bench.json --refresh \
@@ -83,9 +82,8 @@ def load_current(args) -> dict:
     if "queries" not in doc and "queries_file" in doc:
         sys.exit(
             "input is bench.py's totals-only SUMMARY line (no 'queries' map) — "
-            "bench.py prints the full per-query line FIRST and the summary "
-            "LAST; feed the first stdout line or BENCH_SELF(.run).json, "
-            "never `bench.py | tail -1`"
+            "bench.py prints the summary FIRST and the full per-query line "
+            "LAST; feed the last stdout line or BENCH_SELF(.run).json"
         )
     return doc
 
